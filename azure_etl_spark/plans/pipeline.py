@@ -4,10 +4,14 @@
     ingest -> bronze(parquet) -> silver(dedup+sort, parquet)
            -> gold(agg+derive, partitioned) -> {document sink, warehouse sink}
 
-Each stage is a named ``DataFrame -> DataFrame`` function; the runner
-materializes layer boundaries to storage exactly like the reference
-(bronze/silver/gold are real tables other teams read — the
-materialization IS the contract, not an implementation detail).
+Each stage writes its layer and returns that layer as read back from
+storage, as the reference's serving notebooks read gold back from its
+table (goldToCosmosdb.scala:24-25, goldToSynapse.scala:25-26). The
+materialization IS the contract (bronze/silver/gold are real tables
+other teams read), and a consumer of a stage's return value scans the
+written files instead of re-executing the upstream plan: the two
+serving sinks read gold's few rows, not silver's scan, aggregate and
+range sort once each.
 
 Orchestration concerns (sensors, XCom scraping, terraform) are out of
 engine scope (SURVEY.md §2.13); fan-out at serving is plain Python.
@@ -21,20 +25,30 @@ from __future__ import annotations
 
 import datetime as _dt
 import os
-from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from azure_etl_spark.operators.aggregate import grouped_min_max
-from azure_etl_spark.operators.dedup import distinct_rows
+from azure_etl_spark.operators.dedup import distinct_sorted
 from azure_etl_spark.operators.derive import stamp_date_parts, with_expr
 from azure_etl_spark.sources.document import write_documents
-from azure_etl_spark.sources.files import read_parquet, write_parquet, write_partitioned
+from azure_etl_spark.sources.files import (
+    default_table_format,
+    read_parquet,
+    read_table_format,
+    write_parquet,
+    write_partitioned,
+)
 from azure_etl_spark.sources.warehouse import write_warehouse
 
-Stage = Callable[[DataFrame], DataFrame]
+
+def _write_and_read_back(df: DataFrame, path: str) -> DataFrame:
+    """Parquet-write ``df`` and return a scan of the written files. The
+    schema is the one just written, so the read runs no inference job."""
+    write_parquet(df, path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 @dataclass
@@ -45,12 +59,6 @@ class MedallionPipeline:
     key: str = "symbol"
     value: str = "price"
     as_of: _dt.date | None = None
-    # The reference caches silver because it runs TWO actions on it
-    # (display + write, bronzeToSilver.scala:12). Here the quality
-    # metrics ride the write via Observation, so there is only one
-    # action and a cache would be pure memory-store overhead — off by
-    # default, opt-in for callers that add their own second action.
-    cache_silver: bool = False
     results: dict[str, object] = field(default_factory=dict)
 
     def path(self, layer: str) -> str:
@@ -61,8 +69,7 @@ class MedallionPipeline:
     def to_bronze(self, raw: DataFrame) -> DataFrame:
         """Raw snapshot union lands as-is in bronze parquet (the ADF
         copy, datafactory.tf:36-43)."""
-        write_parquet(raw, self.path("bronze"))
-        return raw
+        return _write_and_read_back(raw, self.path("bronze"))
 
     def bronze_to_silver(self, spark: SparkSession) -> DataFrame:
         """bronzeToSilver.scala: read bronze glob -> distinct -> sort.
@@ -73,24 +80,19 @@ class MedallionPipeline:
         ``df.count()`` for metrics would double the scan.
         """
         obs = Observation("silver_quality")
-        from azure_etl_spark.operators.dedup import distinct_sorted
-
         df = distinct_sorted(read_parquet(spark, self.path("bronze")), [self.key])
         df = df.observe(
             obs,
             F.count(F.lit(1)).alias("rows"),
             F.sum(F.col(self.key).isNull().cast("long")).alias("null_keys"),
         )
-        if self.cache_silver:
-            df = df.cache()
-        write_parquet(df, self.path("silver"))
+        silver = _write_and_read_back(df, self.path("silver"))
         self.results["silver_metrics"] = dict(obs.get)
-        return df
+        return silver
 
-    def silver_to_gold(self, spark: SparkSession) -> DataFrame:
-        """silverToGold.scala: grouped min/max + difference + date parts,
-        written partitioned by year/month/day."""
-        silver = read_parquet(spark, self.path("silver"))
+    def gold_plan(self, silver: DataFrame) -> DataFrame:
+        """silverToGold.scala's transform: grouped min/max + difference +
+        date parts, sorted by key."""
         gold = grouped_min_max(
             silver,
             keys=[self.key],
@@ -103,9 +105,15 @@ class MedallionPipeline:
             "difference_between_min_max",
             f"max_value_by_{self.key} - min_value_by_{self.key}",
         )
-        gold = stamp_date_parts(gold, as_of=self.as_of).orderBy(self.key)
-        write_partitioned(gold, self.path("gold"), ["year", "month", "day"])
-        return gold
+        return stamp_date_parts(gold, as_of=self.as_of).orderBy(self.key)
+
+    def silver_to_gold(self, spark: SparkSession) -> DataFrame:
+        """silverToGold.scala: gold written partitioned by year/month/day
+        and read back in the format the write used."""
+        gold = self.gold_plan(read_parquet(spark, self.path("silver")))
+        fmt = default_table_format()
+        write_partitioned(gold, self.path("gold"), ["year", "month", "day"], fmt=fmt)
+        return read_table_format(spark, self.path("gold"), fmt=fmt)
 
     def gold_to_serving(self, spark: SparkSession, gold: DataFrame) -> None:
         """Fan-out: document sink (goldToCosmosdb) + staged warehouse

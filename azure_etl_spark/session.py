@@ -12,6 +12,13 @@ Scale notes (100 TB / 1000 executors):
   only partition-count policy that survives a 1000x scale-up.
 - `spark.sql.shuffle.partitions` here is only the *initial* number; AQE
   coalesces down (local tests) or the cluster config overrides up.
+- `spark.sql.adaptive.coalescePartitions.minPartitionSize` is 64k, not
+  Spark's 1 MB. AQE's default `parallelismFirst` rule already aims at
+  the session's `defaultParallelism`, but the 1 MB floor overrode it:
+  the medallion silver shuffle (~1.9 MB for 500k rows) was coalesced
+  into one task, so distinct + sort + parquet encode ran on one core.
+  Once a shuffle exceeds floor x cores the 64 MB advisory size governs
+  and nothing changes, so the floor only matters for small shuffles.
 - We never hard-code `coalesce(1)` in the engine (the reference does —
   `bronzeToSilver.scala:16` — which is an anti-pattern at scale); small
   single-file output is an opt-in flag in sources/files.py.
@@ -43,6 +50,9 @@ def session_builder(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        # small floor so AQE can spread a small CPU-heavy shuffle over the
+        # session's cores (see the scale notes above); 64k was measured
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # runtime bloom-filter semi-join pruning: a selective dim filter
         # builds a bloom filter that prunes the fact scan BEFORE its

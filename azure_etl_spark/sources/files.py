@@ -47,6 +47,12 @@ except Exception:  # pragma: no cover
     HAVE_DELTA = False
 
 
+def default_table_format() -> str:
+    """The format ``write_partitioned``/``read_table_format`` use when
+    none is given: Delta when available, else parquet."""
+    return "delta" if HAVE_DELTA else "parquet"
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Parquet scan. Globs allowed; filter/column pushdown comes free."""
     return spark.read.parquet(path)
@@ -191,7 +197,7 @@ def write_partitioned(
     (silverToGold.scala:27).
     """
     if fmt is None:
-        fmt = "delta" if HAVE_DELTA else "parquet"
+        fmt = default_table_format()
     if fmt == "snapshot":
         from azure_etl_spark.sources.snapshot import write_snapshot
 
@@ -220,7 +226,7 @@ def read_table_format(
     ):
         return read_snapshot(spark, path, version=version)
     if fmt is None:
-        fmt = "delta" if HAVE_DELTA else "parquet"
+        fmt = default_table_format()
     return spark.read.format(fmt).load(path)
 
 

@@ -159,3 +159,56 @@ def test_incremental_gold_merge_equals_full_recompute(spark, sf_dir):
         raw, keys=["symbol"], value="price", min_alias="mn", max_alias="mx"
     )
     assert sorted(map(tuple, merged.collect())) == sorted(map(tuple, full.collect()))
+
+
+def test_serving_reads_gold_back_not_recomputes(spark, sf_dir, tmp_path):
+    """run() returns gold as read back from its table, so serving scans
+    the written files: the returned plan has no shuffle or aggregate,
+    and both serving sinks hold gold's values exactly."""
+    raw = crypto_view(spark, sf_dir)
+    pipe = MedallionPipeline(root=str(tmp_path), as_of=dt.date(2024, 1, 15))
+    gold = pipe.run(spark, raw)
+
+    plan = gold._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "HashAggregate" not in plan
+
+    gold_rows = gold.collect()
+    # documents are gold cast to string plus a synthetic id
+    as_text = sorted(sorted((c, str(v)) for c, v in r.asDict().items()) for r in gold_rows)
+    doc_files = glob.glob(os.path.join(pipe.path("serving_documents"), "*.json"))
+    docs = [json.loads(line) for f in doc_files for line in open(f) if line.strip()]
+    assert sorted(sorted((c, v) for c, v in d.items() if c != "id") for d in docs) == as_text
+
+    staged = spark.read.parquet(os.path.join(pipe.path("serving_stage"), "goldtable"))
+    assert staged.columns == gold.columns
+    assert sorted(map(tuple, staged.collect())) == sorted(map(tuple, gold_rows))
+
+
+def test_silver_totally_ordered_across_part_files(spark, duck, tmp_path):
+    """Silver's range shuffle spreads a many-symbol input over several
+    part files; read in name order they are one sorted run, and the
+    observed row count is the distinct count."""
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path / "raw")
+    (
+        spark.range(0, 80_000)
+        .select(
+            F.format_string("SYM%05d", F.col("id") % 4000).alias("symbol"),
+            ((F.col("id") * 37 % 1000) / 100).cast("decimal(10,2)").alias("price"),
+        )
+        .write.parquet(src)
+    )
+    pipe = MedallionPipeline(root=str(tmp_path / "m"), as_of=dt.date(2024, 1, 15))
+    pipe.run(spark, spark.read.parquet(src))
+
+    parts = sorted(glob.glob(os.path.join(pipe.path("silver"), "part-*.parquet")))
+    assert len(parts) > 1
+    keys = [k for p in parts for k in pq.read_table(p, columns=["symbol"])["symbol"].to_pylist()]
+    assert keys == sorted(keys)
+
+    distinct = duck.sql(
+        f"SELECT count(*) FROM (SELECT DISTINCT symbol, price "
+        f"FROM read_parquet('{src}/*.parquet'))"
+    ).fetchone()[0]
+    assert pipe.results["silver_metrics"]["rows"] == distinct == len(keys)

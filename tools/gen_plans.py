@@ -623,8 +623,8 @@ def _medallion_gold_df(spark, sf_dir):
         root=tempfile.mkdtemp(prefix="plans_pipe_"), as_of=dt.date(2024, 1, 15)
     )
     p.to_bronze(crypto_view(spark, sf_dir))
-    p.bronze_to_silver(spark)
-    return p.silver_to_gold(spark)
+    # silver_to_gold returns gold read back; explain the aggregate it writes
+    return p.gold_plan(p.bronze_to_silver(spark))
 
 
 def _corpus_funnel_df(spark, sf_dir):
